@@ -3,8 +3,9 @@
 Topology (the Spark rebuild of reference main.py:18-33 +
 scrape.py:612-668):
 
-  binaryFile scan -> mapInPandas(parse_game)  [one row per game,
-      nine array<struct> columns]            -> persist()
+  binaryFile scan -> coalesce(packed)  [parse_scan; see below]
+    -> mapInPandas(parse_game)  [one row per game, nine array<struct>
+       columns, 32 games per pandas frame]   -> persist()
     -> per-game offset window (deterministic kyoku_id minting)
     -> 9x (explode -> finalize ids -> REBALANCE(dt)
            -> write partitionBy("dt")), submitted concurrently
@@ -27,6 +28,21 @@ Design points:
   rows are REBALANCE(dt)-clustered before partitionBy so file count
   tracks data volume, not task count.  Dynamic partition overwrite
   keeps daily re-runs idempotent per date.
+- The parse stage is sized by the bytes it parses, not by its file
+  count.  The binaryFile scan charges every file
+  ``spark.sql.files.openCostInBytes`` (4 MB) against
+  ``maxPartitionBytes`` (128 MB), so ~31 six-KB logs make one scan
+  partition and, through mapInPandas, one Python task — on any
+  cluster.  A Python task has a fixed cost of ~0.3 s (4-core host: a
+  no-op mapInPandas took 1.9 s over 24 partitions, 0.4 s over 4)
+  against a 1.6 ms/game parse kernel, so at ~31 games a task the
+  fixed cost outweighed the parsing.  ``parse_scan`` narrows the scan
+  with ``coalesce`` (no shuffle) to max(defaultParallelism,
+  ceil(listed bytes / maxPartitionBytes)) tasks whenever it has
+  more; the listed bytes are the scan leaf's ``sizeInBytes``, known
+  from its own file listing without running a job.  A task can then
+  hold ~21k games, so the parser yields one pandas frame per
+  PARSE_CHUNK_GAMES games, which bounds each worker's parsed rows.
 - The parser crosses the Python-worker boundary, so the package is
   shipped via addPyFile first (see shipping.py).
 """
@@ -106,13 +122,20 @@ PARSED_GAME_SCHEMA = StructType(
 )
 
 
+# Parsed games per pandas frame the parse stage yields.  Parsed rows
+# hold ~144 KB of Python objects a game and a packed parse task can
+# hold ~21k games, so the rows are handed to Arrow every 32 games: a
+# worker holds ~4.6 MB of parsed rows whatever its task's size.
+PARSE_CHUNK_GAMES = 32
+
+
 def _parse_batches(compat: bool):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from mahjong_etl_spark.operators.mahjong_parse import parse_game
 
         empty = {t: [] for t in TABLE_SCHEMAS}
+        rows: list[dict[str, Any]] = []
         for pdf in batches:
-            rows: list[dict[str, Any]] = []
             for path_date, game_id, content in zip(
                 pdf["dt_raw"], pdf["game_id"], pdf["content"]
             ):
@@ -145,9 +168,48 @@ def _parse_batches(compat: bool):
                         **tables,
                     }
                 )
+                if len(rows) == PARSE_CHUNK_GAMES:
+                    yield pd.DataFrame(rows)
+                    rows = []
+        if rows:
             yield pd.DataFrame(rows)
 
     return fn
+
+
+def _packed(scan: DataFrame) -> DataFrame:
+    """``scan`` narrowed to max(defaultParallelism, ceil(listed bytes /
+    maxPartitionBytes)) partitions when it has more (see the module
+    docstring).  The listed bytes are the statistics of the scan's
+    single leaf: a file relation's size from its own listing, or the
+    size a foreachBatch micro-batch carries over from its source.  An
+    unknown size leaves the scan as it is."""
+    spark = scan.sparkSession
+    qe = scan._jdf.queryExecution()
+    leaves = qe.analyzed().collectLeaves()
+    if leaves.size() != 1:
+        return scan
+    conf = spark._jsparkSession.sessionState().conf()
+    listed = int(str(leaves.head().stats().sizeInBytes()))
+    if listed >= conf.defaultSizeInBytes():  # no size known
+        return scan
+    target = max(
+        spark.sparkContext.defaultParallelism,
+        -(-listed // conf.filesMaxPartitionBytes()),
+    )
+    if qe.executedPlan().execute().getNumPartitions() > target:
+        return scan.coalesce(target)
+    return scan
+
+
+def parse_scan(scan: DataFrame, compat: bool = True) -> DataFrame:
+    """Parse a (dt_raw, game_id, content) file scan, packed into one
+    Python task per core or per maxPartitionBytes of XML: one output
+    row per game (see PARSED_GAME_SCHEMA).  The batch pipeline and the
+    ingest stream's micro-batches both parse through here."""
+    return _packed(scan.select("dt_raw", "game_id", "content")).mapInPandas(
+        _parse_batches(compat), schema=PARSED_GAME_SCHEMA
+    )
 
 
 def parse_logs(
@@ -161,10 +223,7 @@ def parse_logs(
     from ..sources.xml_source import scan_logs
 
     ensure_shipped(spark)
-    scan = scan_logs(spark, log_dir, date_prefix).select(
-        "dt_raw", "game_id", "content"
-    )
-    return scan.mapInPandas(_parse_batches(compat), schema=PARSED_GAME_SCHEMA)
+    return parse_scan(scan_logs(spark, log_dir, date_prefix), compat)
 
 
 def _with_offsets(parsed: DataFrame) -> DataFrame:

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.etl import PARSED_GAME_SCHEMA, _parse_batches, table_df
+from ..plans.etl import parse_scan, table_df
 from ..schemas import TABLE_SCHEMAS
 from .etl_stream import _lineage_id, publish_batch
 
@@ -74,13 +74,10 @@ def start_ingest(
     from ..shipping import ensure_shipped
 
     ensure_shipped(spark)
-    parse = _parse_batches(compat)
     lineage = _lineage_id(spark, checkpoint_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        all_parsed = batch_df.mapInPandas(
-            parse, schema=PARSED_GAME_SCHEMA
-        ).persist()
+        all_parsed = parse_scan(batch_df, compat).persist()
         parsed = all_parsed.where(F.col("error").isNull())
         try:
             # table_df mints days*100000 + kyoku_offset + local; solve

@@ -16,8 +16,7 @@ from mahjong_etl_spark.plans.catalog import register_tables
 from mahjong_etl_spark.plans.etl import run_etl
 from mahjong_etl_spark.sources.paiyama import wall_df
 
-from .reference_oracle import run_reference_date
-from .test_mahjong_parser import FIXTURE_ROOT, _fixture_files
+from .helpers import FIXTURE_ROOT, _fixture_files, canon, reference_date_runner
 
 DATES = ["20240102", "20240103"]
 
@@ -51,6 +50,7 @@ def _rowset(rows: list[dict]) -> set:
 
 
 def test_etl_output_matches_reference(spark, etl_out):
+    run_reference_date = reference_date_runner()
     out, _ = etl_out
     expected: dict[str, list[dict]] = {}
     for dt_dir in DATES:
@@ -210,6 +210,7 @@ def test_synthetic_corpus_matches_reference(spark, tmp_path, seed, rare):
     reference's rare branches: sanma empty-hai3 skip and nuki-dora N
     words, mid-game DORA reveals, mid-game UN re-joins (last name
     wins), BYE disconnects (ignored), and double-ron kyokus."""
+    run_reference_date = reference_date_runner()
     from mahjong_etl_spark.sources.synth_games import generate_corpus
 
     src = str(tmp_path / "synth_src")
@@ -326,3 +327,106 @@ def test_tiny_sink_path_vs_rebalance_path_identical(spark, etl_out, tmp_path, mo
             .collect()
         )
         assert a == b, table
+
+
+def _render_tree(root, n_days: int, games_per_day: int) -> str:
+    """``games_per_day`` synthetic logs under each of ``n_days`` real
+    consecutive dates (``<root>/YYYYMMDD/<game_id>.xml``)."""
+    import random
+
+    from mahjong_etl_spark.sources.synth_games import render_game
+
+    for k in range(n_days):
+        day = (datetime.date(2024, 2, 27) + datetime.timedelta(days=k)).strftime("%Y%m%d")
+        os.makedirs(os.path.join(root, day))
+        for i in range(games_per_day):
+            with open(os.path.join(root, day, f"{day}gm-{i:03d}.xml"), "w") as f:
+                f.write(render_game(random.Random(f"{day}:{i}")))
+    return str(root)
+
+
+def _num_partitions(df) -> int:
+    return df._jdf.queryExecution().executedPlan().execute().getNumPartitions()
+
+
+def test_parse_packing_does_not_change_any_table(spark, tmp_path):
+    """How the scan packs files into parse tasks must not reach the
+    output: one file per Python task and the packed default write the
+    same nine tables row for row, minted kyokus.id included."""
+    from mahjong_etl_spark.plans.etl import parse_logs
+    from mahjong_etl_spark.schemas import TABLE_SCHEMAS
+
+    logs = _render_tree(tmp_path / "logs", n_days=3, games_per_day=8)
+    n_files = 24
+    # one file per scan partition: every file costs more than a
+    # partition may hold.  maxPartitionBytes is lowered as well, or the
+    # packing rule would narrow those partitions again (its target is
+    # ceil(listed bytes / maxPartitionBytes)).
+    keys = ("spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes")
+    prior = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "1024")
+        assert _num_partitions(parse_logs(spark, logs)) == n_files
+        one_per_task = run_etl(spark, logs, str(tmp_path / "one_per_task"))
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert _num_partitions(parse_logs(spark, logs)) < n_files
+    packed = run_etl(spark, logs, str(tmp_path / "packed"))
+
+    assert one_per_task == packed and packed["games"] == n_files
+    for t in TABLE_SCHEMAS:
+        a = spark.read.parquet(str(tmp_path / "one_per_task" / t))
+        b = spark.read.parquet(str(tmp_path / "packed" / t))
+        assert canon(a) == canon(b), t
+
+
+def test_parse_logs_packs_many_small_files_into_one_task_per_core(spark, tmp_path):
+    """binaryFile charges each file a 4 MB open cost, so the raw scan
+    of many small logs makes one partition per ~31 files; the parse
+    runs on at most defaultParallelism partitions instead."""
+    from mahjong_etl_spark.plans.etl import parse_logs
+    from mahjong_etl_spark.sources.xml_source import scan_logs
+
+    cores = spark.sparkContext.defaultParallelism
+    n_files = 32 * cores + 8
+    day = tmp_path / "logs" / "20240301"
+    day.mkdir(parents=True)
+    for i in range(n_files):
+        (day / f"g{i:05d}.xml").write_text("<mjloggm ver=\"2.3\"></mjloggm>")
+    logs = str(tmp_path / "logs")
+    assert _num_partitions(scan_logs(spark, logs)) > cores
+    assert _num_partitions(parse_logs(spark, logs)) <= cores
+
+
+def test_parse_yields_one_frame_per_chunk_of_games(monkeypatch):
+    """No Spark: a 70-game input batch comes out as 32 + 32 + 6 game
+    frames that together equal the one-frame result."""
+    import random
+
+    import pandas as pd
+
+    import mahjong_etl_spark.plans.etl as etl_mod
+    from mahjong_etl_spark.sources.synth_games import render_game
+
+    batch = pd.DataFrame(
+        {
+            "dt_raw": ["20240301"] * 60 + ["20241399"] * 10,
+            "game_id": [f"g{i:02d}" for i in range(70)],
+            "content": [
+                render_game(random.Random(i)).encode() for i in range(70)
+            ],
+        }
+    )
+    frames = list(etl_mod._parse_batches(True)(iter([batch])))
+    assert [len(f) for f in frames] == [32, 32, 6]
+
+    monkeypatch.setattr(etl_mod, "PARSE_CHUNK_GAMES", 1000)
+    (whole,) = etl_mod._parse_batches(True)(iter([batch]))
+    joined = pd.concat(frames, ignore_index=True)
+    assert list(joined.columns) == list(whole.columns)
+    assert joined.to_dict("records") == whole.to_dict("records")

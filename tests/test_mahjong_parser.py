@@ -10,17 +10,9 @@ import pytest
 
 from mahjong_etl_spark.operators.mahjong_parse import parse_game
 
-from .reference_oracle import run_reference_date
+from .helpers import FIXTURE_ROOT, _fixture_files, reference_date_runner
 
-FIXTURE_ROOT = os.path.join(os.path.dirname(__file__), "fixtures", "logs")
 EPOCH = date(1970, 1, 1)
-
-
-def _fixture_files(dt_dir: str) -> list[tuple[str, str]]:
-    d = os.path.join(FIXTURE_ROOT, dt_dir)
-    return sorted(
-        (f[:-4], os.path.join(d, f)) for f in os.listdir(d) if f.endswith(".xml")
-    )
 
 
 def _ours_for_date(dt_dir: str, compat: bool = True) -> dict[str, list[dict]]:
@@ -50,6 +42,7 @@ def _ours_for_date(dt_dir: str, compat: bool = True) -> dict[str, list[dict]]:
 
 @pytest.mark.parametrize("dt_dir", ["20240102", "20240103"])
 def test_parser_matches_reference(dt_dir):
+    run_reference_date = reference_date_runner()
     expected = run_reference_date(_fixture_files(dt_dir), dt_dir)
     actual = _ours_for_date(dt_dir)
     for table in expected:

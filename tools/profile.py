@@ -1,15 +1,17 @@
 #!/usr/bin/env python
-"""r14 optimization-round profiling harness (guide §1).
+"""Optimization-round profiling harness for registry queries.
 
 For each named registry query: capture ``explain("formatted")`` to
-``plans/r14/<name>_<tag>.txt`` and time the computation through the
-noop sink (guide §1.4 — computes every column of every row, no
+``plans/r<round>/<name>_<tag>.txt`` and time the computation through
+the noop sink (computes every column of every row, no
 collect-to-driver cost) N times, printing per-run seconds.
 
 Usage:
-    python tools/profile_r14.py --tag before [--runs 3] [--no-plan] name...
-    python tools/profile_r14.py --tag before --slowest 25   # from BENCH_DETAIL
-    python tools/profile_r14.py --summary plan.txt          # plan shape summary
+    python tools/profile.py --round 16 --tag before [--runs 3] [--no-plan] name...
+    python tools/profile.py --round 16 --tag before --slowest 25   # from BENCH_DETAIL
+
+The ETL phases (parse, Python worker time, sinks) are measured by
+``perfbench/run.py --workload backfill --trace 1`` instead.
 
 Timing methodology matches bench.py (same session factory, same
 warm-up) so numbers are comparable; the noop sink replaces collect()
@@ -51,6 +53,8 @@ def plan_summary(text: str) -> str:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
+    ap.add_argument("--round", required=True,
+                    help="round label; plan dumps go to plans/r<round>/")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--no-plan", action="store_true")
@@ -75,7 +79,7 @@ def main() -> None:
     from mahjong_etl_spark.plans.registry import registry
     from mahjong_etl_spark.session import get_spark, local_rows_df
 
-    spark = get_spark("profile-r14")
+    spark = get_spark(f"profile-r{args.round}")
     spark.sparkContext.setLogLevel("ERROR")
     reg = registry()
 
@@ -111,7 +115,7 @@ def main() -> None:
     except Exception as exc:
         print(f"warm-up skipped: {exc}", file=sys.stderr)
 
-    plans_dir = os.path.join(HERE, "plans", "r14")
+    plans_dir = os.path.join(HERE, "plans", f"r{args.round}")
     os.makedirs(plans_dir, exist_ok=True)
 
     results = {}
